@@ -553,39 +553,31 @@ def test_auto_two_level_detection(spark, tmp_path):
         )
 
 
-def test_conf_scope_concurrent_restore(spark, tmp_path):
-    """Two views maintained concurrently on ONE session must never
-    interleave conf set/restore and leave the maintenance shuffle
-    sizing pinned (round-2 advisory: the active flag was per-view)."""
-    import threading
-    import time as _time
+def test_large_batch_after_small_one(spark, tmp_path):
+    """A 20k-doc batch following a 100-doc bootstrap lands every doc:
+    nothing in the batch path carries the small batch's sizing over
+    to the large one (id ranges disjoint, so a pure insert)."""
+    view = MapReduceView(
+        spark,
+        str(tmp_path / "s1"),
+        id_col="doc_id",
+        group_cols=["k"],
+        agg_exprs=[F.count(F.lit(1)).alias("cnt")],
+        n_key_spans=4,
+        n_doc_spans=4,
+    )
 
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    views = [
-        people_view(spark, tmp_path / f"cs{i}") for i in range(2)
-    ]
-    errors = []
+    def batch(n, start=0):
+        return spark.range(start, start + n).select(
+            F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+            (F.col("id") % 7).cast("string").alias("k"),
+        )
 
-    def work(v):
-        try:
-            for _ in range(3):
-                with v._conf_scope(2):
-                    assert (
-                        spark.conf.get("spark.sql.shuffle.partitions") == "2"
-                    )
-                    _time.sleep(0.01)
-        except BaseException as e:  # noqa: BLE001
-            errors.append(e)
-
-    threads = [
-        threading.Thread(target=work, args=(v,)) for v in views for _ in (0, 1)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    assert spark.conf.get("spark.sql.shuffle.partitions") == default
+    big = 20_000
+    view.execute(batch(100))
+    view.execute(batch(big, start=1000))
+    total = view.final_df().agg(F.sum("cnt")).collect()[0][0]
+    assert total == 100 + big
 
 
 def test_time_travel_final_df(spark, scenario_view):
@@ -611,30 +603,10 @@ def test_time_travel_final_df(spark, scenario_view):
         v.final_df(version=99_999).collect()
 
 
-def test_new_session_isolated_from_maintenance_conf(spark, tmp_path):
-    """Analytics issued DURING a maintenance window should run on
-    ``spark.newSession()`` (same cluster, isolated conf): while a view
-    holds a pinned maintenance conf scope, the parent session sees the
-    maintenance shuffle-partition count but a child session keeps the
-    default — the documented concurrent-analytics pattern
-    (plans/view.py:_conf_scope)."""
-    v = people_view(spark, tmp_path)
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    with v._conf_scope(2, pin=True):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-        child = spark.newSession()
-        assert child.conf.get("spark.sql.shuffle.partitions") == default
-        # and the child actually executes with its own conf
-        n = child.range(10).groupBy((F.col("id") % 3).alias("g")).count()
-        assert n.rdd.getNumPartitions() != 2 or default == "2"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == default
-
-
 def test_two_views_maintained_concurrently(spark, tmp_path):
     """Two views on ONE SparkSession, maintained from concurrent
-    threads: the module-level conf-scope lock serializes their
-    right-sized maintenance windows, both stores end correct, and the
-    session conf is restored to the default afterwards."""
+    threads: both stores end correct and the session's shuffle
+    partition count is never touched."""
     import threading
 
     default = spark.conf.get("spark.sql.shuffle.partitions")

@@ -126,6 +126,25 @@ _CHANGED = [
     "q_dedup_semantic",
     "q_dedup_embed",
     "q_dedup_cluster",
+    # session-conf maintenance scopes deleted: these store-lifecycle
+    # operators ran their builds under one, and the index serving
+    # queries now return lazy plans instead of checkpoints
+    "q_store_stats_prune",
+    "q_store_merge",
+    "q_store_cdc",
+    "q_cdc_incremental_rollup",
+    "q_store_clone",
+    "q_store_restore",
+    "q_store_delete_vectors",
+    "q_store_schema_evolution",
+    "q_time_travel",
+    "q_store_rescale",
+    "q_alter_reduce",
+    "q_store_vacuum",
+    "q_store_diff",
+    "q_sim_index_persisted",
+    "q_sim_index_pq",
+    "q_text_index_persisted",
 ]
 
 # Rows-only by design (oracle=None is intrinsic: sketches/ANN recall

@@ -13,52 +13,15 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import MapReduceView
-from ..plans.view import maintenance_scope
 from ..plans.store import ManifestTable
 from ..sources import Catalog
 from . import register
-
-
-def _store_scoped(*tables: str):
-    """Decorator for the store-lifecycle attestation operators: run
-    the operator's BUILD phase (temp-store writes, merges, compacts —
-    chains of small jobs) under a maintenance scope sized from the
-    operator's ACTUAL source tables' parquet bytes (driver-side; ~4x
-    decompression allowance; max over the tables — r12 advice: sizing
-    orders-based operators from customer pinned a larger build to a
-    small scope). Bench-scale scenarios stop paying full-width AQE
-    stage cascades per action; a large source keeps the session conf
-    (maintenance_scope shrinks only). The RETURNED DataFrame is
-    evaluated by the caller outside the scope, so serving reads keep
-    the session's full configuration."""
-    import functools
-    import math
-
-    tables = tables or ("customer",)
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            try:
-                sz = max(
-                    os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
-                    for t in tables
-                )
-                n = max(8, math.ceil(sz * 4 / (64 * 1024 * 1024)))
-            except OSError:
-                n = None
-            with maintenance_scope(spark, n):
-                return fn(spark, sf_dir)
-
-        return wrapper
-
-    return deco
-
 
 
 def _latest_event_per_user(df: DataFrame) -> DataFrame:
@@ -111,7 +74,14 @@ def _parquet_col_max(path: str, col: str):
     return mx
 
 
-_VIEW_CACHE: dict[tuple[int, str, int], MapReduceView] = {}
+# Built views per session, keyed weakly on the session object like the
+# table-plan cache (sources/tables.py), never on id(spark): only the
+# same live session can match a key, whatever ids later sessions get.
+# A cached view references its session, so an entry lasts until the
+# cache is cleared (bench.py and tools/job_trace.py clear it).
+_VIEW_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _events_view(spark: SparkSession, sf_dir: str, n_batches: int = 3) -> MapReduceView:
@@ -137,8 +107,8 @@ def _events_view(spark: SparkSession, sf_dir: str, n_batches: int = 3) -> MapRed
     span's map rows already fit one task. The two-level path is
     driver-attested by q_rereduce_tree; the crossover math lives in
     the README scaling table."""
-    cache_key = (id(spark), sf_dir, n_batches)
-    cached = _VIEW_CACHE.get(cache_key)
+    per_session = _VIEW_CACHE.setdefault(spark, {})
+    cached = per_session.get((sf_dir, n_batches))
     if cached is not None:
         return cached
     # The build reads events once per batch plus the bounds probe;
@@ -189,7 +159,7 @@ def _events_view(spark: SparkSession, sf_dir: str, n_batches: int = 3) -> MapRed
             view.execute(batch)
     finally:
         ev.unpersist()
-    _VIEW_CACHE[cache_key] = view
+    per_session[(sf_dir, n_batches)] = view
     return view
 
 
@@ -234,7 +204,6 @@ def q_upsert_recount(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is re-submitted with a new nation; old group shrinks, new grows, grand "
     "total conserved.",
 )
-@_store_scoped()
 def q_key_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = Catalog(spark, sf_dir).customer
     store = tempfile.mkdtemp(prefix="upmr_migrate_")
@@ -277,7 +246,6 @@ def q_key_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the file layout and nothing else, including the dirty-span "
     "bookkeeping the next Execute depends on (Executer.cs:305-367).",
 )
-@_store_scoped()
 def q_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = Catalog(spark, sf_dir).customer
     store = tempfile.mkdtemp(prefix="upmr_compact_")
@@ -350,7 +318,6 @@ _DAY_1998_LO = 2922  # (1998-01-01 - 1990-01-01).days
     "set, never the answer. This is the second pruning axis next to "
     "span membership: span = WHICH key, stats = WHICH range.",
 )
-@_store_scoped("orders")
 def q_store_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).orders
     base = tempfile.mkdtemp(prefix="upmr_statsprune_")
@@ -474,7 +441,6 @@ def _merge_scenario(
     "All balance math in integer cents (floor(decimal*100)) so both "
     "engines agree exactly.",
 )
-@_store_scoped()
 def q_store_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_merge_")
     untouched_before = {
@@ -542,7 +508,6 @@ def q_store_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inserts = surviving updates' new image plus the shifted-key "
     "inserts. Integer-cents math both sides.",
 )
-@_store_scoped()
 def q_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_cdc_")
     v1 = t.version
@@ -614,7 +579,6 @@ def q_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "materialized-view maintenance loop a 100 TB deployment runs "
     "instead of nightly full rebuilds.",
 )
-@_store_scoped()
 def q_cdc_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_cdcroll_")
     v1 = t.version
@@ -696,7 +660,6 @@ def q_cdc_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unlinks only its own name) is what makes hardlink sharing safe. "
     "Oracle = base aggregate UNION merged aggregate.",
 )
-@_store_scoped()
 def q_store_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_clone_")
     c = t.clone_to(t.path + "_branch")
@@ -752,7 +715,6 @@ def q_store_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tie-in: the engine's recompute-from-durable-state contract "
     "(Executer.cs:165-203) extended to point-in-time recovery.",
 )
-@_store_scoped()
 def q_store_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_restore_")
     v1 = t.version
@@ -807,7 +769,6 @@ def q_store_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "now, restore zero read-time overhead later. Oracle = the plain "
     "filtered aggregate; integer cents both sides.",
 )
-@_store_scoped("orders")
 def q_store_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).orders
     base = tempfile.mkdtemp(prefix="upmr_dv_")
@@ -870,7 +831,6 @@ def q_store_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fails the gate. The NULL priority group in the result IS the "
     "legacy half — the oracle derives the same split from parity.",
 )
-@_store_scoped("orders")
 def q_store_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).orders
     base = tempfile.mkdtemp(prefix="upmr_evolve_")
@@ -1134,14 +1094,16 @@ def q_upsert_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # snapshot time travel — read the view AS OF an earlier batch.
 
-_TT_CACHE: dict[tuple[int, str], tuple[MapReduceView, int]] = {}
+_TT_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _time_travel_view(spark: SparkSession, sf_dir: str):
     """2-batch events view + the finals-manifest version archived
     after batch 1 (cached per session+sf like _events_view)."""
-    key = (id(spark), sf_dir)
-    cached = _TT_CACHE.get(key)
+    per_session = _TT_CACHE.setdefault(spark, {})
+    cached = per_session.get(sf_dir)
     if cached is not None:
         return cached
     ev = Catalog(spark, sf_dir).events
@@ -1175,7 +1137,7 @@ def _time_travel_view(spark: SparkSession, sf_dir: str):
     view.execute(batch(0, mid))
     v1 = view._fin_t.version
     view.execute(batch(mid, hi + 1))
-    _TT_CACHE[key] = (view, v1)
+    per_session[sf_dir] = (view, v1)
     return view, v1
 
 
@@ -1203,7 +1165,6 @@ def _time_travel_view(spark: SparkSession, sf_dir: str):
     "no data copies, the same mechanism as Delta/Iceberg VERSION AS "
     "OF; vacuum(keep_versions=N) bounds the archive.",
 )
-@_store_scoped("events")
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     view, v1 = _time_travel_view(spark, sf_dir)
     return view.final_df(version=v1).select(
@@ -1273,7 +1234,6 @@ def q_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rewrite unit, so they must track corpus growth; upgrading from "
     "pytest-only to an externally-attested behavior.",
 )
-@_store_scoped()
 def q_store_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = Catalog(spark, sf_dir).customer
     store = tempfile.mkdtemp(prefix="upmr_rescale_")
@@ -1324,7 +1284,6 @@ def q_store_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     "therefore attests that map rows carried the value column all "
     "along and the recompute used them.",
 )
-@_store_scoped("orders")
 def q_alter_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).orders
     store = tempfile.mkdtemp(prefix="upmr_alter_")
@@ -1433,7 +1392,6 @@ def q_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "forever; a real deployment must reclaim) — the exact trade "
     "Delta's VACUUM/retention makes.",
 )
-@_store_scoped()
 def q_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, tgt, src = _merge_scenario(spark, sf_dir, "upmr_vacuum_")
     v1 = t.version
@@ -1673,7 +1631,6 @@ def q_covariance_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Executer.cs:165-203); versioned diff is the capability its "
     "persistence layer lacks that Delta/Iceberg deployments rely on.",
 )
-@_store_scoped()
 def q_store_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _tgt, src = _merge_scenario(spark, sf_dir, "upmr_diff_")
     v1 = t.version

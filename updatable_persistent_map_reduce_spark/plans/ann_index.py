@@ -43,13 +43,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_expr
 from .store import ManifestTable
-from .view import (
-    _plan_width,
-    maint_small_side,
-    maintained,
-    maintenance_n,
-    maintenance_scope,
-)
 
 
 class IvfIndex:
@@ -63,18 +56,6 @@ class IvfIndex:
 
     # ----- build / maintain ------------------------------------------------
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata).
-        IvfPqIndex inherits and adds its codes table."""
-        tables = [self._listed] + (
-            [self._codes] if hasattr(self, "_codes") else []
-        )
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None, *tables
-        )
-
-    @maintained
     def build(self, e: DataFrame, kmeans_iters: int = 2) -> None:
         """Fit centroids on ``e`` (vec_id, embedding) and write the
         cell-listed table in one job; atomic manifest publish."""
@@ -95,7 +76,6 @@ class IvfIndex:
         mapping = self._listed.write_data(listed)
         self._listed.commit(replace_all=mapping)
 
-    @maintained
     def upsert(self, new_vectors: DataFrame) -> None:
         """Assign new (vec_id, embedding) rows to their nearest
         existing cells and APPEND — an incremental index update with
@@ -123,7 +103,6 @@ class IvfIndex:
             self.spark, mapping, keys=assigned.select("vec_id")
         )
 
-    @maintained
     def delete(self, vectors: DataFrame) -> None:
         """MERGE-ON-READ delete of vectors from the index — the store's
         tombstone pattern (q_store_delete_vectors, incremental.py)
@@ -150,7 +129,6 @@ class IvfIndex:
         )
         self._listed.delete_keys(keys, on=["vec_id"])
 
-    @maintained
     def compact(self, min_files: int = 1) -> dict:
         """Materialize tombstones / fold small files in the listed
         tier — the store's normal maintenance, exposed on the index."""
@@ -237,21 +215,10 @@ class IvfIndex:
         cosine + per-query window as the brute-force baseline.
         ``nprobe >= n_cells`` probes everything — exact search.
 
-        Runs under a derived maintenance scope sized from the index's
-        table bytes and materializes the (bounded: k x queries) top-k
-        inside it: unscoped, the caller's collect fanned into 4-7 AQE
-        stage jobs for a bench-scale probe; a big index leaves the
-        session untouched (shrink-only), the 100 TB path. Identical
-        rows either way."""
-        with maintenance_scope(self.spark, maintenance_n(None, self._listed)):
-            return self._search_inner(queries, k, nprobe)
-
-    def _search_inner(
-        self,
-        queries: list[tuple[int, list[float]]],
-        k: int,
-        nprobe: int,
-    ) -> DataFrame:
+        Returns a lazy plan: the caller's action runs the probe under
+        the session's own conf, and the plan keeps naming the probed
+        cells' files (``inputFiles()``). The file list is resolved
+        now, so act on the result before the next compact + vacuum."""
         cents = self.centroids()
         qmat = np.array([v for _, v in queries], dtype=np.float64)
         qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
@@ -272,7 +239,7 @@ class IvfIndex:
             "query_id long, qe array<float>, cell int",
         )
         scored = (
-            listed.join(maint_small_side(probes), "cell")
+            listed.join(F.broadcast(probes), "cell")
             .filter(F.col("vec_id") != F.col("query_id"))
             .dropDuplicates(["query_id", "vec_id"])
             .select(
@@ -286,13 +253,11 @@ class IvfIndex:
         w = W.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("vec_id")
         )
-        out = (
+        return (
             scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select("query_id", "vec_id", "cos_sim", "rnk")
         )
-        # materialize inside the scope (see search docstring)
-        return out.localCheckpoint()
 
 
 _PQ_QSCALE = 1024  # fixed-point scale for normalized-domain PQ codes
@@ -363,7 +328,6 @@ class IvfPqIndex(IvfIndex):
 
     # ----- build -----------------------------------------------------------
 
-    @maintained
     def build(self, e: DataFrame, kmeans_iters: int = 2) -> None:
         """Coarse build (centroids + full-vector cells) plus the PQ
         payload: fit the global scale and codebooks, encode every
@@ -492,7 +456,6 @@ class IvfPqIndex(IvfIndex):
             pq_code.alias("pq_code"),
         )
 
-    @maintained
     def upsert(self, new_vectors: DataFrame) -> None:
         """Incremental append to BOTH tiers — the inherited listed-only
         append would leave the new vectors invisible to ADC probes
@@ -510,7 +473,6 @@ class IvfPqIndex(IvfIndex):
             keys=new_vectors.select("vec_id"),
         )
 
-    @maintained
     def delete(self, vectors: DataFrame) -> None:
         """Tombstone the vec_ids in BOTH tiers. Codes first: ADC
         candidates come from the codes table, so a crash between the
@@ -529,7 +491,6 @@ class IvfPqIndex(IvfIndex):
         self._codes.delete_keys(keys, on=["vec_id"])
         self._listed.delete_keys(keys, on=["vec_id"])
 
-    @maintained
     def compact(self, min_files: int = 1) -> dict:
         """Materialize tombstones in both tiers (codes then listed)."""
         codes = self._codes.compact(self.spark, min_files=min_files)
@@ -563,20 +524,8 @@ class IvfPqIndex(IvfIndex):
         optionally keep the ADC-top-``rerank`` per query, then read
         only the survivors' cells from the full-vector table for the
         exact cosine top-k. ``last_probe`` records the span pruning
-        both reads achieved. Scoped + checkpointed like
-        :meth:`IvfIndex.search` (same job-count rationale)."""
-        with maintenance_scope(
-            self.spark, maintenance_n(None, self._codes, self._listed)
-        ):
-            return self._search_pq_inner(queries, k, nprobe, rerank)
-
-    def _search_pq_inner(
-        self,
-        queries: list[tuple[int, list[float]]],
-        k: int,
-        nprobe: int,
-        rerank: int | None,
-    ) -> DataFrame:
+        both reads achieved. Like :meth:`IvfIndex.search`, the result
+        is a lazy plan over the resolved files."""
         qscale, books = self._load_pq()
         cents = self.centroids()
         qmat = np.array([v for _, v in queries], dtype=np.float64)
@@ -629,7 +578,7 @@ class IvfPqIndex(IvfIndex):
                 "lut", sub_code + F.lit(mi * self.ksub + 1)
             )
         cand = (
-            codes.join(maint_small_side(probes), "cell")
+            codes.join(F.broadcast(probes), "cell")
             .filter(F.col("vec_id") != F.col("query_id"))
             .dropDuplicates(["query_id", "vec_id"])
             .select("query_id", "qe", "vec_id", "cell", adc.alias("adc"))
@@ -663,9 +612,8 @@ class IvfPqIndex(IvfIndex):
         w = W.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("vec_id")
         )
-        out = (
+        return (
             scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select("query_id", "vec_id", "cos_sim", "rnk")
         )
-        return out.localCheckpoint()

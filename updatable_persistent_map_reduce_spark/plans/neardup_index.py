@@ -58,7 +58,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .store import ManifestTable
-from .view import _plan_width, maintained, maintenance_n, maintenance_scope
 
 
 class NearDupIndex:
@@ -154,15 +153,6 @@ class NearDupIndex:
 
     # ----- build / append ---------------------------------------------------
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata)."""
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None,
-            self._bands, self._sh,
-        )
-
-    @maintained
     def build(self, docs: DataFrame) -> None:
         """Signature ``docs`` (doc_id, text) once; land band postings
         bucketed by (band, sig)-hash span and shingle payloads by
@@ -178,7 +168,6 @@ class NearDupIndex:
         finally:
             sigs.unpersist()
 
-    @maintained
     def append(self, docs: DataFrame) -> None:
         """Append NEW documents: signatures land under atomic manifest
         snapshots (shingles first — see module docstring for the
@@ -230,7 +219,6 @@ class NearDupIndex:
         finally:
             sigs.unpersist()
 
-    @maintained
     def delete(self, docs: DataFrame) -> None:
         """TAKEDOWN: remove documents (doc_id, text) from the band
         index — the ANN index's MoR tombstone pattern (plans/
@@ -297,7 +285,6 @@ class NearDupIndex:
         finally:
             sigs.unpersist()
 
-    @maintained
     def compact(self, min_files: int = 1) -> dict:
         """Materialize pending takedown tombstones / fold small files
         in both tiers — the store's normal maintenance, exposed on the
@@ -322,21 +309,11 @@ class NearDupIndex:
         at exact integer Jaccard >= 1/2, reading ONLY the batch's band
         signatures' spans plus the candidates' shingle spans.
 
-        The whole probe — span discovery AND the verify join — runs
-        under a derived maintenance scope sized from the batch width +
-        the index's table bytes, and the (bounded: near-dup pairs of
-        one batch) result materializes INSIDE it via localCheckpoint:
-        unscoped, the two discovery collects and the caller's collect
-        each fanned into 3-6 AQE stage-materialization jobs for a
-        bounded probe (20 jobs/probe measured in q_takedown_cascade —
-        guide §1.2). A big batch over a big index leaves the session
-        untouched (maintenance_n is shrink-only), which is the 100 TB
-        path. The returned data is identical either way; it is now a
-        materialized snapshot rather than a lazy plan."""
-        with maintenance_scope(self.spark, self._maint_n(batch)):
-            return self._probe_inner(batch)
-
-    def _probe_inner(self, batch: DataFrame) -> DataFrame:
+        The batch's signatures are cached only for the two span
+        discovery collects, which also set ``last_probe``. The result
+        is a lazy plan over the resolved files: the caller's action
+        re-derives the batch signatures (the same deterministic Arrow
+        kernel) and runs the verify joins."""
         sigs = self._sig_frame(batch).persist()
         bands_b = self._band_rows(sigs).persist()
         empty = self.spark.createDataFrame(
@@ -417,15 +394,11 @@ class NearDupIndex:
                     .alias("uni"),
                 )
             )
-            out = scored.filter(2 * F.col("inter") >= F.col("uni")).select(
+            return scored.filter(2 * F.col("inter") >= F.col("uni")).select(
                 "doc_a",
                 "doc_b",
                 F.expr("inter * 10000L DIV uni").alias("jaccard_bp"),
             )
-            # Materialize inside the scope (see probe docstring): one
-            # right-sized job instead of an at-conf AQE cascade at the
-            # caller's collect, and the signature pass never re-runs.
-            return out.localCheckpoint()
         finally:
             bands_b.unpersist()
             sigs.unpersist()

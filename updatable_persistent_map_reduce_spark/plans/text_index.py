@@ -60,13 +60,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_expr
 from .store import ManifestTable
-from .view import (
-    _plan_width,
-    maint_small_side,
-    maintained,
-    maintenance_n,
-    maintenance_scope,
-)
 
 K1 = 1.2
 B = 0.75
@@ -177,15 +170,6 @@ class InvertedIndex:
             )
         return docs
 
-    def _maint_n(self, batch: DataFrame | None = None) -> int:
-        """Partition sizing for @maintained entry points: batch scan
-        width + this index's table bytes (driver-side metadata)."""
-        return maintenance_n(
-            _plan_width(batch) if batch is not None else None,
-            self._post, self._docs, self._repl,
-        )
-
-    @maintained
     def build(self, docs: DataFrame, seq_col: str | None = None) -> None:
         """Tokenize ``docs`` (doc_id, text) into term-hash-bucketed
         postings + the doc index; one write job each, atomic publish."""
@@ -203,7 +187,6 @@ class InvertedIndex:
         self._repl.commit(replace_all={})
         self.refresh_stats()
 
-    @maintained
     def upsert(self, new_docs: DataFrame, seq_col: str | None = None) -> None:
         """Latest-wins document upsert: brand-new ids append; ids that
         already exist are REPLACED — their old postings stop scoring
@@ -328,7 +311,6 @@ class InvertedIndex:
             )
         self._maybe_auto_compact()
 
-    @maintained
     def delete(self, doc_ids: DataFrame) -> None:
         """TAKEDOWN: remove documents from the serving index — the
         reference's delete-and-reschedule contract (Executer.cs:
@@ -435,7 +417,6 @@ class InvertedIndex:
         if n_spans and n_files >= k * n_spans:
             self.compact()
 
-    @maintained
     def compact(self) -> None:
         """Fold the delete vectors into the postings files: one
         distributed filter-rewrite job dropping every dead generation,
@@ -466,7 +447,6 @@ class InvertedIndex:
         with open(self._stats_path) as f:
             return json.load(f)
 
-    @maintained
     def refresh_stats(self) -> dict:
         """Recompute (n_docs, total_dl) exactly from the doc_index —
         one columnar count+sum. The incremental per-upsert update is
@@ -496,7 +476,7 @@ class InvertedIndex:
             return post
         tomb = tomb.select("doc_id", "live_gen")
         return (
-            post.join(maint_small_side(tomb), "doc_id", "left")
+            post.join(F.broadcast(tomb), "doc_id", "left")
             .filter(
                 F.col("live_gen").isNull()
                 | (F.col("gen") == F.col("live_gen"))
@@ -521,19 +501,9 @@ class InvertedIndex:
         probed postings after the latest-wins filter, (n_docs, avgdl)
         from the maintained stats.
 
-        Runs under a derived maintenance scope sized from the index's
-        table bytes and materializes the (bounded: top-k) result
-        inside it — unscoped, the term-span collect and the caller's
-        collect each fanned into 2-4 AQE stage jobs per query; a big
-        index leaves the session untouched (shrink-only). Identical
-        rows either way."""
-        with maintenance_scope(
-            self.spark,
-            maintenance_n(None, self._post, self._docs, self._repl),
-        ):
-            return self._bm25_inner(terms, k)
-
-    def _bm25_inner(self, terms: list[str], k: int) -> DataFrame:
+        Returns a lazy plan that keeps naming the probed postings
+        files (``inputFiles()``); the caller's action runs it under
+        the session's own conf."""
         s = self.stats()
         n_docs = int(s["n_docs"])
         spans = self._term_spans(terms)
@@ -548,7 +518,7 @@ class InvertedIndex:
         avgdl = float(s["total_dl"]) / n_docs
         tf = self._live_filter(post).filter(F.col("token").isin(terms))
         dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        scored = tf.join(maint_small_side(dfreq), "token").select(
+        scored = tf.join(F.broadcast(dfreq), "token").select(
             "doc_id",
             "token",
             (
@@ -590,8 +560,8 @@ class InvertedIndex:
         else:
             for i in range(1, len(terms)):
                 total = total + F.col(f"s_{i}")
-        ranked = p.select(
-            "doc_id", F.round(total, 4).alias("score")
-        ).orderBy(F.desc("score"), "doc_id")
-        # materialize inside the scope (see bm25 docstring)
-        return ranked.limit(k).localCheckpoint()
+        return (
+            p.select("doc_id", F.round(total, 4).alias("score"))
+            .orderBy(F.desc("score"), "doc_id")
+            .limit(k)
+        )

@@ -131,10 +131,8 @@ when the index is small.
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import json
-import math
 import operator
 import os
 import threading
@@ -148,55 +146,6 @@ from .store import ManifestTable
 
 
 _CLOSED_AGG_RE = None  # compiled lazily; see _rereduce_closed
-
-
-def maintenance_n(width: int | None, *tables) -> int:
-    """Right-size a maintenance phase (guide §2.2: derive partitioning
-    from the data, never a constant): max of the input plan's scan
-    width and the involved ManifestTables' on-disk bytes / 64 MB —
-    all driver-side metadata, no job. Floored at 8; values at or above
-    the session default leave the session untouched (maintenance_scope
-    only ever shrinks), which is the 100 TB path."""
-    total = 0
-    for t in tables:
-        try:
-            total += t.stats()["bytes"]
-        except Exception:  # noqa: BLE001 — missing table: contributes 0
-            pass
-    return max(8, width or 0, math.ceil(total / (64 * 1024 * 1024)))
-
-
-def maintained(fn):
-    """Decorator for index maintenance entry points (build/upsert/
-    delete/compact): runs the method under a maintenance_scope sized
-    by the instance's ``_maint_n(batch)``, where ``batch`` is the
-    first positional DataFrame argument (None for argless
-    maintenance). Nested scopes no-op, so decorated methods freely
-    call each other; serving/query paths stay undecorated and keep
-    the session's full AQE configuration."""
-
-    @functools.wraps(fn)
-    def wrapper(self, *a, **k):
-        batch = next((x for x in a if isinstance(x, DataFrame)), None)
-        with maintenance_scope(self.spark, self._maint_n(batch)):
-            return fn(self, *a, **k)
-
-    return wrapper
-
-
-def scope_is_small() -> bool:
-    """True while the CURRENT thread is inside a maintenance_scope that
-    shrank the session (AQE off, auto-broadcast off): plan maintenance
-    joins as shuffle-hash there — one job, no broadcast-build dispatch
-    — and as broadcast otherwise (the at-scale strategy)."""
-    return bool(getattr(_CONF_SCOPE_TLS, "small", False))
-
-
-def maint_small_side(df: DataFrame) -> DataFrame:
-    """Hint the bounded side of a maintenance join: broadcast at scale,
-    shuffle-hash inside a shrunken maintenance scope (where the
-    broadcast build's separate job is pure dispatch overhead)."""
-    return df.hint("shuffle_hash") if scope_is_small() else F.broadcast(df)
 
 
 def _rereduce_closed(agg_exprs: Sequence[Column] | None) -> bool:
@@ -241,162 +190,6 @@ def _doc_hash(uid_column: Column) -> Column:
 
 MapFn = Callable[[DataFrame], DataFrame]
 
-# spark.conf is session-global: serialize modifying maintenance scopes
-# across all views/threads sharing a session (see _conf_scope). The
-# re-entrancy/nesting guard is per-thread.
-def _plan_width(df: DataFrame) -> int | None:
-    """Partition count of ``df``'s plan before any new shuffle —
-    driver-side plan inspection, no job. For a batch that is narrow
-    ops over a scan (the upsert contract) this is the scan width:
-    1-ish for a bench-scale file, thousands at 100 TB — a cheap,
-    scale-proportional stand-in for input size. A LOCAL relation
-    (createDataFrame — takedown id lists, probe batches) reports
-    width 1: its RDD partition count is just defaultParallelism, a
-    parallelism artifact that made maintenance_n think a one-row
-    batch was cluster-wide and kept the scope from shrinking (every
-    small maintenance action then ran 2-5 AQE stage-materialization
-    jobs instead of one). Detected from the analyzed plan's leaves
-    (LocalRelation / LogicalRDD / OneRowRelation — driver-provided
-    data, never a storage scan); any file-backed leaf keeps the real
-    scan width."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        if all(
-            leaves.apply(i).nodeName()
-            in ("LocalRelation", "LogicalRDD", "OneRowRelation")
-            for i in range(leaves.size())
-        ):
-            return 1
-        return df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — exotic plans: keep defaults
-        return None
-
-
-_CONF_SCOPE_LOCK = threading.RLock()
-_CONF_SCOPE_TLS = threading.local()
-
-
-@contextlib.contextmanager
-def maintenance_scope(spark: SparkSession, n: int | None, pin: bool = False):
-    """Scope the session to right-sized maintenance jobs.
-
-    The store's internal jobs (dirty-set collects, survivor
-    rewrites, span re-aggregation, manifest writes) run over ONE
-    batch + its dirty slice — usually orders of magnitude smaller
-    than the analytics queries the session is configured for. A
-    32-partition AQE plan on a 1500-row batch spends its wall time
-    on stage materialization and empty tasks, ~4x the query cost at
-    bench scale. So: when the right-sized partition count ``n`` is
-    below the session default — i.e. the batch is small and the
-    partition count is already right-sized, which is AQE
-    coalescing's whole job locally — run the maintenance with a
-    static ``n``-partition plan (AQE off). Big batches (``n`` >=
-    session default) leave the session untouched: full parallelism,
-    AQE skew-splitting, the 100 TB path.
-
-    Nested scopes are no-ops while one is active (tracked
-    per-thread). ``pin=True`` (the user's explicit
-    ``maintenance_shuffle_partitions``) always applies ``n`` as the
-    maintenance partition count — raising as well as lowering —
-    and stays marked active so inner derived scopes cannot
-    override the explicit setting. A pin=True scope additionally
-    takes precedence over an active *derived* (non-pin) scope — a
-    view's explicit maintenance_shuffle_partitions applies even when
-    its execute() runs under an outer @_store_scoped /
-    @maintained scope (r12 advice) — and restores the outer scope's
-    conf on exit; only a pin under a pin no-ops.
-
-    The session conf is SESSION-global state, so a module-level
-    lock serializes modifying scopes across views/threads sharing
-    one SparkSession: two concurrently maintained views can no
-    longer interleave set/restore and leave the maintenance value
-    pinned. Analytics queries issued on the same session DURING a
-    maintenance window still see the maintenance conf — run them
-    on ``spark.newSession()`` (shares the cluster, isolates conf)
-    if that matters."""
-    conf = spark.conf
-    prev_active = getattr(_CONF_SCOPE_TLS, "active", False)
-    prev_pinned = getattr(_CONF_SCOPE_TLS, "pinned", False)
-    prev_small = getattr(_CONF_SCOPE_TLS, "small", False)
-    # A nested scope no-ops while one is active — EXCEPT a pin=True
-    # scope under a derived (non-pin) scope: the explicit view-level
-    # setting wins over the outer heuristic and restores it on exit.
-    if n is None or (prev_active and not (pin and not prev_pinned)):
-        yield
-        return
-    _CONF_SCOPE_LOCK.acquire()
-    held = True
-    try:
-        try:
-            default = int(conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # noqa: BLE001 — unusual session config
-            default = None
-        modify = default is not None and (n < default if not pin else True)
-        if not modify and not pin:
-            _CONF_SCOPE_LOCK.release()
-            held = False
-            yield
-            return
-        old_aqe = None
-        old_bcast = None
-        old_disc = None
-        shrank = modify and default is not None and n < default
-        if modify:
-            old_aqe = conf.get("spark.sql.adaptive.enabled")
-            conf.set("spark.sql.shuffle.partitions", str(n))
-            if shrank:
-                conf.set("spark.sql.adaptive.enabled", "false")
-                # Inside a shrunken scope every join side is bounded
-                # (one batch + its dirty slice): a broadcast build is a
-                # SEPARATE job whose dispatch costs more than shuffling
-                # those rows within the action's own job, so turn
-                # auto-broadcast off; maintenance joins consult
-                # scope_is_small() and hint shuffle-hash instead
-                # (guide §3.1 — pick the strategy deliberately).
-                old_bcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-                conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-                # Maintenance reads hand Spark explicit manifest-resolved
-                # FILE paths; above 32 of them the reader launches a
-                # parallel listing JOB (parallelPartitionDiscovery) whose
-                # dispatch (~120 ms) dwarfs the driver stat()ing a
-                # shrunken scope's bounded file list. Unscoped (at-scale)
-                # reads keep the session default — a 100 TB table's
-                # listing still parallelizes.
-                old_disc = conf.get(
-                    "spark.sql.sources.parallelPartitionDiscovery.threshold"
-                )
-                conf.set(
-                    "spark.sql.sources.parallelPartitionDiscovery.threshold",
-                    "10000",
-                )
-        _CONF_SCOPE_TLS.active = True
-        _CONF_SCOPE_TLS.pinned = pin
-        _CONF_SCOPE_TLS.small = shrank
-        try:
-            yield
-        finally:
-            _CONF_SCOPE_TLS.active = prev_active
-            _CONF_SCOPE_TLS.pinned = prev_pinned
-            _CONF_SCOPE_TLS.small = prev_small
-            if modify:
-                conf.set("spark.sql.shuffle.partitions", str(default))
-                if old_aqe is not None:
-                    conf.set("spark.sql.adaptive.enabled", old_aqe)
-                if old_bcast is not None:
-                    conf.set(
-                        "spark.sql.autoBroadcastJoinThreshold", old_bcast
-                    )
-                if old_disc is not None:
-                    conf.set(
-                        "spark.sql.sources.parallelPartitionDiscovery"
-                        ".threshold",
-                        old_disc,
-                    )
-    finally:
-        if held:
-            _CONF_SCOPE_LOCK.release()
-
-
 
 # Engine bookkeeping columns stamped onto every map output; user map
 # outputs may not use these names (execute() raises on a clash).
@@ -439,7 +232,6 @@ class MapReduceView:
         two_level: bool | None = None,
         n_sub_buckets: int = 8,
         migrate_span_hash: bool = False,
-        maintenance_shuffle_partitions: int | None = None,
         auto_compact_files_per_span: int | None = 16,
     ):
         if (agg_exprs is None) == (reduce_fn is None):
@@ -467,12 +259,6 @@ class MapReduceView:
             two_level = _rereduce_closed(self.agg_exprs)
         self.n_key_spans = n_key_spans
         self.n_doc_spans = n_doc_spans
-        # Maintenance jobs are right-sized per batch (see
-        # :meth:`_conf_scope`): an explicit value here pins every
-        # phase; otherwise the probe phase uses the previous batch's
-        # hint and the heavy phase is sized from the current batch +
-        # dirty-pair file bytes.
-        self.maintenance_shuffle_partitions = maintenance_shuffle_partitions
         # Append-heavy ingest degrades ~linearly in accumulated sliver
         # files (measured: 60 insert batches -> 3,840 map slivers, the
         # NEXT batch 9.4s vs 1.6s compacted — tools/scale_compact.py),
@@ -671,41 +457,6 @@ class MapReduceView:
             ],
         )
 
-    # ----- maintenance job sizing ------------------------------------------
-
-    # Target rows / on-disk bytes per maintenance shuffle partition:
-    # view-state rows are narrow (key + aggregate columns), so ~250k
-    # rows is a few MB — small enough to aggregate in-core, big enough
-    # that task overhead doesn't dominate; the byte form sizes the
-    # survivor-rewrite phase from the dirty pairs' actual file sizes.
-    # The floor keeps a handful of tasks in flight even for tiny
-    # batches: 1-partition plans serialize the survivor rewrite and the
-    # per-span file writes behind a single core.
-    _ROWS_PER_PARTITION = 250_000
-    _BYTES_PER_PARTITION = 64 * 1024 * 1024
-    _MIN_PARTITIONS = 8
-
-    def _size_partitions(self, rows: int, file_bytes: int = 0) -> int:
-        return max(
-            self._MIN_PARTITIONS,
-            math.ceil(rows / self._ROWS_PER_PARTITION),
-            math.ceil(file_bytes / self._BYTES_PER_PARTITION),
-        )
-
-    def _hint_partitions(self) -> int | None:
-        """Up-front sizing hint for the batch's *probe phase*: the
-        previous batch's observed dirty-slice rows (meta). Safe for the
-        probe at any true batch size — the probe is a distinct over
-        span/bucket ids whose map-side partial aggregation reduces any
-        input to a few thousand rows before the shuffle, so a small
-        reducer count never bottlenecks it. The *heavy* phase is sized
-        from the current batch + dirty-pair file bytes instead (see
-        ``_apply_rest``)."""
-        last = self._meta().get("last_batch_rows")
-        if last is not None:
-            return self._size_partitions(last)
-        return None
-
     @staticmethod
     def _mapping_rows(table: ManifestTable, mapping: dict) -> int:
         """Exact row count of a write_data mapping's files from their
@@ -721,22 +472,6 @@ class MapReduceView:
                 for f in fs
             )
         )
-
-    def _span_file_bytes(self, table: ManifestTable, spans) -> int:
-        """On-disk bytes of ``spans``' files per the current manifest —
-        driver-side metadata only, no Spark job."""
-        mapping = table.spans()
-        return sum(
-            os.path.getsize(os.path.join(table.path, f))
-            for s in spans
-            for f in mapping.get(s, [])
-            if os.path.exists(os.path.join(table.path, f))
-        )
-
-    def _conf_scope(self, n: int | None, pin: bool = False):
-        """Delegates to :func:`maintenance_scope` (module-level so the
-        JoinView shares the same lock/TLS and shrink-only semantics)."""
-        return maintenance_scope(self.spark, n, pin)
 
     # ----- journal / meta --------------------------------------------------
 
@@ -868,7 +603,7 @@ class MapReduceView:
             "pspan",
             F.col("kspan") * F.lit(self.n_sub_buckets) + F.col("bucket"),
         )
-        self._apply(ids, mapped, src_width=_plan_width(batch_df))
+        self._apply(ids, mapped)
         self._maybe_auto_compact()
 
     def _maybe_auto_compact(self) -> None:
@@ -917,7 +652,6 @@ class MapReduceView:
         self,
         ids: DataFrame,
         mapped: DataFrame,
-        src_width: int | None = None,
     ) -> None:
         """Shared core of execute/delete_docs: ``ids`` = upper-cased
         distinct doc ids of the batch, ``mapped`` = the batch's new map
@@ -933,10 +667,7 @@ class MapReduceView:
             return df
 
         try:
-            with self._conf_scope(
-                self.maintenance_shuffle_partitions, pin=True
-            ):
-                self._apply_inner(ids, mapped, cache, src_width)
+            self._apply_inner(ids, mapped, cache)
         finally:
             for df in cached:
                 df.unpersist()
@@ -946,27 +677,12 @@ class MapReduceView:
         ids: DataFrame,
         mapped: DataFrame,
         cache: Callable[[DataFrame], DataFrame],
-        src_width: int | None = None,
     ) -> None:
-        # Size the batch's CACHED PLANS from its scan width —
-        # driver-side plan metadata, no job. A cache() captures its
-        # physical plan at REGISTRATION conf, so registering under the
-        # session's full-width AQE conf makes every later scoped
-        # action that materializes the cache replay a 3-job AQE stage
-        # cascade for a few thousand rows. A 100 TB batch's wide scan
-        # keeps the session's full-parallelism AQE plan (guide §2.2:
-        # size partitions from the data, not a constant).
-        batch_n = (
-            None if src_width is None
-            else max(self._MIN_PARTITIONS, src_width)
-        )
-        with self._conf_scope(batch_n):
-            cache(ids)
-            # The mapped batch feeds several downstream plans (span
-            # discovery, map_results content, doc_index content);
-            # batches are bounded, so caching beats recomputing the
-            # user map.
-            cache(mapped)
+        cache(ids)
+        # The mapped batch feeds several downstream plans (span
+        # discovery, map_results content, doc_index content); batches
+        # are bounded, so caching beats recomputing the user map.
+        cache(mapped)
 
         # --- bootstrap fast path: a completely fresh store cannot hold
         # prior versions of any incoming doc, so the whole invalidation
@@ -974,8 +690,7 @@ class MapReduceView:
         # provably a no-op — write everything, derive the dirty spans
         # from the write mappings themselves.
         if not self._map_t.spans() and not self._idx_t.spans():
-            with self._conf_scope(batch_n):
-                self._bootstrap(mapped, cache)
+            self._bootstrap(mapped, cache)
             return
 
         # --- dirty sets (reference: ScheduleReduction, Executer.cs:115-151)
@@ -997,60 +712,41 @@ class MapReduceView:
         new_pspans: set[int] = set()
         old_pspans: set[int] = set()
         batch_dspans: set[int] = set()
-        # The probe (and the pruned index lookup in _apply_rest) is
-        # distinct-over-span-ids work: map-side partial aggregation
-        # reduces ANY input size to a few thousand rows before the
-        # shuffle, so sizing it by the previous batch's hint is safe
-        # even when this batch is much larger. The heavy phase below is
-        # sized from THIS batch + the dirty pairs' file bytes.
-        # groupBy+count instead of distinct: identical shuffle shape
-        # (map-side partial aggregation over a few thousand distinct
-        # tuples), but the counts measure the batch for free — the 'k'
-        # rows sum to the mapped row count, so no separate count job.
-        # The probe plan is CONSTRUCTED inside the scope so
-        # maint_small_side sees the shrunken-scope TLS and plans the
-        # folded index lookup as a shuffle-hash join — construction
-        # outside picked the at-scale broadcast hint, whose build is a
-        # separate dispatch-only job per batch (r12 advice item 3).
-        with self._conf_scope(self._hint_partitions()):
-            ids_d = ids.withColumn("dspan", self._dspan(F.col("uid")))
-            probe = mapped.select(
-                F.lit("k").alias("t"),
-                F.col("kspan").alias("v"),
-                F.col("bucket").alias("b"),
+        # The probe is a distinct over span ids: map-side partial
+        # aggregation reduces any batch to a few thousand rows before
+        # the shuffle, and AQE coalesces the rest.
+        ids_d = ids.withColumn("dspan", self._dspan(F.col("uid")))
+        probe = mapped.select(
+            F.lit("k").alias("t"),
+            F.col("kspan").alias("v"),
+            F.col("bucket").alias("b"),
+        )
+        if idx_all is not None:
+            probe = probe.unionByName(
+                idx_all.join(
+                    F.broadcast(ids_d), ["dspan", "uid"], "inner"
+                ).select(
+                    F.lit("o").alias("t"),
+                    F.col("kspan").alias("v"),
+                    bucket_of.alias("b"),
+                )
             )
-            if idx_all is not None:
-                probe = probe.unionByName(
-                    idx_all.join(
-                        maint_small_side(ids_d), ["dspan", "uid"], "inner"
-                    ).select(
-                        F.lit("o").alias("t"),
-                        F.col("kspan").alias("v"),
-                        bucket_of.alias("b"),
-                    )
+        else:
+            # Two-phase path only: the ids' doc-spans drive the
+            # pruned doc_index read in _apply_rest. With the lookup
+            # folded above, batch_dspans is never consulted — skip
+            # the branch (one fewer probe input scan).
+            probe = probe.unionByName(
+                ids_d.select(
+                    F.lit("d").alias("t"),
+                    F.col("dspan").alias("v"),
+                    F.lit(0).alias("b"),
                 )
-            else:
-                # Two-phase path only: the ids' doc-spans drive the
-                # pruned doc_index read in _apply_rest. With the lookup
-                # folded above, batch_dspans is never consulted — skip
-                # the branch (one fewer probe input scan).
-                probe = probe.unionByName(
-                    ids_d.select(
-                        F.lit("d").alias("t"),
-                        F.col("dspan").alias("v"),
-                        F.lit(0).alias("b"),
-                    )
-                )
-            probe_rows = probe.groupBy("t", "v", "b").agg(
-                F.count(F.lit(1)).alias("c")
-            ).collect()
-        n_mapped = 0
-        for r in probe_rows:
+            )
+        for r in probe.distinct().collect():
             if r.t == "d":
                 batch_dspans.add(r.v)
             else:
-                if r.t == "k":
-                    n_mapped += r.c
                 tgt = (new_kspans, new_pspans) if r.t == "k" else (
                     old_kspans, old_pspans
                 )
@@ -1059,7 +755,6 @@ class MapReduceView:
         self._apply_rest(
             ids, mapped, cache, new_kspans, old_kspans, new_pspans,
             old_pspans, batch_dspans, bucket_of, ids_d,
-            n_mapped=n_mapped,
             lookup_done=idx_all is not None,
         )
 
@@ -1109,8 +804,7 @@ class MapReduceView:
         new_rows = mapped.select(*data_cols, F.col("pspan"))
         results: dict[str, dict[int, list[str]]] = {}
         results["map"] = self._map_t.write_data(new_rows)
-        n_mapped = self._mapping_rows(self._map_t, results["map"])
-        if n_mapped == 0:
+        if self._mapping_rows(self._map_t, results["map"]) == 0:
             self._write_meta({**meta, "batch_seq": meta["batch_seq"] + 1})
             return
         l1_content = None
@@ -1181,13 +875,7 @@ class MapReduceView:
             self._l1_t.commit(replace=results["l1"])
         self._fin_t.commit(replace=results["fin"])
         os.remove(self._journal_path)
-        self._write_meta(
-            {
-                **meta,
-                "batch_seq": meta["batch_seq"] + 1,
-                "last_batch_rows": int(n_mapped),
-            }
-        )
+        self._write_meta({**meta, "batch_seq": meta["batch_seq"] + 1})
 
     def _apply_rest(
         self,
@@ -1201,7 +889,6 @@ class MapReduceView:
         batch_dspans: set[int],
         bucket_of: Column,
         ids_d: DataFrame,
-        n_mapped: int = 0,
         lookup_done: bool = False,
     ) -> None:
         meta = self._meta()
@@ -1211,21 +898,14 @@ class MapReduceView:
             else self._idx_t.read(self.spark, spans=batch_dspans)
         )
         if idx is not None:
-            # Distinct-over-span-ids like the probe: safe under the
-            # previous batch's sizing hint at any batch size. Plan
-            # construction inside the scope so maint_small_side plans
-            # for the scope that executes it (r12 advice item 3).
-            with self._conf_scope(self._hint_partitions()):
-                old_locs = idx.join(
-                    maint_small_side(ids_d), ["dspan", "uid"], "inner"
+            old_locs = idx.join(F.broadcast(ids_d), ["dspan", "uid"], "inner")
+            old_rows = (
+                old_locs.select(
+                    F.col("kspan").alias("v"), bucket_of.alias("b")
                 )
-                old_rows = (
-                    old_locs.select(
-                        F.col("kspan").alias("v"), bucket_of.alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
+                .distinct()
+                .collect()
+            )
             for r in old_rows:
                 old_kspans.add(r.v)
                 old_pspans.add(r.v * self.n_sub_buckets + r.b)
@@ -1243,199 +923,187 @@ class MapReduceView:
         # converging recompute described in the module docstring.
         self._write_journal(sorted(dirty_kspans))
 
-        # Heavy phase — survivor rewrite, re-aggregation, data-file
-        # writes — sized from THIS batch plus the dirty key-spans' map
-        # file bytes (driver-side manifest metadata): a large batch
-        # after a small one gets full parallelism, and a small batch
-        # over a big dirty slice gets enough reducers for the rewrite.
-        heavy_n = self._size_partitions(
-            n_mapped,
-            file_bytes=self._span_file_bytes(
-                self._map_t, self._map_pspans(dirty_kspans)
-            ),
+        # --- classify dirty pairs
+        # (reference: PersistMap + delete of replaced docs,
+        # Executer.cs:165-183, 258 — its MapResults/<key>/<bucket>/
+        # tree is exactly this granularity)
+        #
+        #   rewrite pairs = pairs holding a replaced doc ("o"-tagged
+        #     via the index; the index never loses an entry, so a pair
+        #     absent from ``old_pspans`` provably holds no prior
+        #     version of any incoming doc) — survivors must be
+        #     filtered out, so the pair's file set is replaced.
+        #   every other dirty pair only gains brand-new rows: an
+        #     O(batch) *append* of new files. Rewrite amplification is
+        #     therefore bounded by the doc-bucket — a small upsert into
+        #     a giant group rewrites corpus/(n_key_spans*n_sub_buckets)
+        #     bytes, never O(group) — and insert-heavy ingest (the
+        #     dominant 100 TB regime) pays no rewrite at all.
+        all_pspans = set(self._map_t.spans())
+        rewrite_pspans = old_pspans & all_pspans  # stale entries: no files
+        append_pspans = new_pspans - rewrite_pspans
+        data_cols = [c for c in mapped.columns if c != "pspan"]
+        new_rows = mapped.select(*data_cols, F.col("pspan"))
+        existing_dirty = self._map_t.read(
+            self.spark, spans=dirty_pspans & all_pspans
         )
-        with self._conf_scope(heavy_n):
-            # --- classify dirty pairs
-            # (reference: PersistMap + delete of replaced docs,
-            # Executer.cs:165-183, 258 — its MapResults/<key>/<bucket>/
-            # tree is exactly this granularity)
-            #
-            #   rewrite pairs = pairs holding a replaced doc ("o"-tagged
-            #     via the index; the index never loses an entry, so a pair
-            #     absent from ``old_pspans`` provably holds no prior
-            #     version of any incoming doc) — survivors must be
-            #     filtered out, so the pair's file set is replaced.
-            #   every other dirty pair only gains brand-new rows: an
-            #     O(batch) *append* of new files. Rewrite amplification is
-            #     therefore bounded by the doc-bucket — a small upsert into
-            #     a giant group rewrites corpus/(n_key_spans*n_sub_buckets)
-            #     bytes, never O(group) — and insert-heavy ingest (the
-            #     dominant 100 TB regime) pays no rewrite at all.
-            all_pspans = set(self._map_t.spans())
-            rewrite_pspans = old_pspans & all_pspans  # stale entries: no files
-            append_pspans = new_pspans - rewrite_pspans
-            data_cols = [c for c in mapped.columns if c != "pspan"]
-            new_rows = mapped.select(*data_cols, F.col("pspan"))
-            existing_dirty = self._map_t.read(
-                self.spark, spans=dirty_pspans & all_pspans
-            )
-            if existing_dirty is not None:
-                survivors = existing_dirty
-                if rewrite_pspans:
-                    survivors = survivors.join(maint_small_side(ids), "uid", "left_anti")
-                pair_rows = survivors.select(new_rows.columns).unionByName(new_rows)
-            else:
-                pair_rows = new_rows
-            # Two-level mode consumes ``pair_rows`` twice (the map write
-            # and the L1 partial recompute) — cache it so the second
-            # consumer reads columnar cache, populated by whichever job
-            # scans it first. Single-level consumes it exactly ONCE (the
-            # map write; finals re-reduce the just-written files below),
-            # so there is no cache and no materializing count job —
-            # the r12 ``pair_rows.count()`` is gone (guide §1.2).
-            if self.two_level:
-                cache(pair_rows)
-
-            # --- re-aggregate only dirty state
-            # (reference: ExecuteReduce over scheduled spans,
-            # Executer.cs:47-85). Two-level: the reduce tree is
-            # *materialized* — the dirty pairs' partials recompute from
-            # ``pair_rows`` (already exactly the dirty pairs' data: the
-            # manifest pruned the read to those files) and finals re-reduce
-            # the span's partials (the reference's BucketId/BatchSize
-            # grouping, Executer.cs:62, with strictly finer dirty
-            # granularity). Single-level: Catalyst's partial+final
-            # HashAggregate is the reduce tree, re-run over the dirty
-            # key-spans' FILES — the just-written replacement/append files
-            # plus the spans' retained committed files — exactly like the
-            # two-level finals re-reduce the just-written L1 files
-            # (_write_finals_from_l1): reading tiny page-cache-warm
-            # columnar state back beats a cache + materializing count.
-            l1_content = None
-            if self.two_level:
-                pairs_by_span: dict[int, list[int]] = {}
-                for p in sorted(dirty_pspans):
-                    pairs_by_span.setdefault(p // self.n_sub_buckets, []).append(
-                        p % self.n_sub_buckets
-                    )
-                dirty_pred = self._pair_pred(pairs_by_span)
-                l1_existing = self._l1_t.read(self.spark, spans=dirty_kspans)
-                recomputed = pair_rows.groupBy(
-                    "kspan", "bucket", *self.group_cols
-                ).agg(*self.agg_exprs)
-                if l1_existing is not None:
-                    l1_surv = l1_existing.filter(~dirty_pred)
-                    l1_content = l1_surv.select(recomputed.columns).unionByName(
-                        recomputed
-                    )
-                else:
-                    l1_content = recomputed
-
-            # --- write the map table FIRST (one job covers the whole
-            # table: append pairs land only the batch's new rows,
-            # rewrite pairs land their full replacement content —
-            # survivors + batch; the two slices are disjoint by pspan,
-            # and the commit splits the mapping by pair class). Running
-            # it before the finals lets the finals re-reduce the
-            # written files; in two-level mode it also materializes the
-            # pair_rows cache for the L1 recompute. (NB ``pair_rows``
-            # also holds existing rows of append-class pairs — read for
-            # the re-aggregation — which must NOT be rewritten, hence
-            # the slice-and-union rather than writing ``pair_rows``.)
-            map_write_pspans = append_pspans | rewrite_pspans
-            slices = []
+        if existing_dirty is not None:
+            survivors = existing_dirty
             if rewrite_pspans:
-                slices.append(
-                    pair_rows.filter(F.col("pspan").isin(sorted(rewrite_pspans)))
+                survivors = survivors.join(F.broadcast(ids), "uid", "left_anti")
+            pair_rows = survivors.select(new_rows.columns).unionByName(new_rows)
+        else:
+            pair_rows = new_rows
+        # Two-level mode consumes ``pair_rows`` twice (the map write
+        # and the L1 partial recompute) — cache it so the second
+        # consumer reads columnar cache, populated by whichever job
+        # scans it first. Single-level consumes it exactly ONCE (the
+        # map write; finals re-reduce the just-written files below),
+        # so there is no cache and no materializing count job —
+        # the r12 ``pair_rows.count()`` is gone (guide §1.2).
+        if self.two_level:
+            cache(pair_rows)
+
+        # --- re-aggregate only dirty state
+        # (reference: ExecuteReduce over scheduled spans,
+        # Executer.cs:47-85). Two-level: the reduce tree is
+        # *materialized* — the dirty pairs' partials recompute from
+        # ``pair_rows`` (already exactly the dirty pairs' data: the
+        # manifest pruned the read to those files) and finals re-reduce
+        # the span's partials (the reference's BucketId/BatchSize
+        # grouping, Executer.cs:62, with strictly finer dirty
+        # granularity). Single-level: Catalyst's partial+final
+        # HashAggregate is the reduce tree, re-run over the dirty
+        # key-spans' FILES — the just-written replacement/append files
+        # plus the spans' retained committed files — exactly like the
+        # two-level finals re-reduce the just-written L1 files
+        # (_write_finals_from_l1): reading tiny page-cache-warm
+        # columnar state back beats a cache + materializing count.
+        l1_content = None
+        if self.two_level:
+            pairs_by_span: dict[int, list[int]] = {}
+            for p in sorted(dirty_pspans):
+                pairs_by_span.setdefault(p // self.n_sub_buckets, []).append(
+                    p % self.n_sub_buckets
                 )
-            if append_pspans:
-                slices.append(
-                    new_rows.filter(F.col("pspan").isin(sorted(append_pspans)))
+            dirty_pred = self._pair_pred(pairs_by_span)
+            l1_existing = self._l1_t.read(self.spark, spans=dirty_kspans)
+            recomputed = pair_rows.groupBy(
+                "kspan", "bucket", *self.group_cols
+            ).agg(*self.agg_exprs)
+            if l1_existing is not None:
+                l1_surv = l1_existing.filter(~dirty_pred)
+                l1_content = l1_surv.select(recomputed.columns).unionByName(
+                    recomputed
                 )
-            map_rows = slices[0] if len(slices) == 1 else (
-                slices[0].unionByName(slices[1]) if slices else None
+            else:
+                l1_content = recomputed
+
+        # --- write the map table FIRST (one job covers the whole
+        # table: append pairs land only the batch's new rows,
+        # rewrite pairs land their full replacement content —
+        # survivors + batch; the two slices are disjoint by pspan,
+        # and the commit splits the mapping by pair class). Running
+        # it before the finals lets the finals re-reduce the
+        # written files; in two-level mode it also materializes the
+        # pair_rows cache for the L1 recompute. (NB ``pair_rows``
+        # also holds existing rows of append-class pairs — read for
+        # the re-aggregation — which must NOT be rewritten, hence
+        # the slice-and-union rather than writing ``pair_rows``.)
+        map_write_pspans = append_pspans | rewrite_pspans
+        slices = []
+        if rewrite_pspans:
+            slices.append(
+                pair_rows.filter(F.col("pspan").isin(sorted(rewrite_pspans)))
             )
-            results: dict[str, dict[int, list[str]]] = {}
-            results["map"] = (
-                self._map_t.write_data(map_rows) if map_write_pspans else {}
+        if append_pspans:
+            slices.append(
+                new_rows.filter(F.col("pspan").isin(sorted(append_pspans)))
             )
+        map_rows = slices[0] if len(slices) == 1 else (
+            slices[0].unionByName(slices[1]) if slices else None
+        )
+        results: dict[str, dict[int, list[str]]] = {}
+        results["map"] = (
+            self._map_t.write_data(map_rows) if map_write_pspans else {}
+        )
 
-            # Single-level finals: re-reduce the dirty key-spans' map
-            # FILES — the files the write above just landed plus the
-            # spans' retained (non-rewritten) committed files.
-            finals = None
-            if not self.two_level:
-                retained_pspans = {
-                    p
-                    for p in all_pspans
-                    if p // self.n_sub_buckets in dirty_kspans
-                } - rewrite_pspans
-                pieces = []
-                new_files = [
-                    os.path.join(self._map_t.path, f)
-                    for fs in results["map"].values()
-                    for f in fs
-                ]
-                if new_files:
-                    pieces.append(
-                        self.spark.read.schema(self._map_t._schema)
-                        .parquet(*new_files)
-                        .select(new_rows.columns)
-                    )
-                retained = self._map_t.read(self.spark, spans=retained_pspans)
-                if retained is not None:
-                    pieces.append(retained.select(new_rows.columns))
-                if pieces:
-                    content = (
-                        pieces[0]
-                        if len(pieces) == 1
-                        else pieces[0].unionByName(pieces[1])
-                    )
-                    if self.agg_exprs is not None:
-                        finals = content.groupBy(
-                            "kspan", *self.group_cols
-                        ).agg(*self.agg_exprs)
-                    else:
-                        finals = content.groupBy(
-                            "kspan", *self.group_cols
-                        ).applyInPandas(
-                            self.reduce_fn,
-                            schema=f"kspan int, {self.reduce_schema}",
-                        )
-
-            # --- remaining data-file writes run concurrently
-            # (invisible until commit): the doc-index write and the
-            # finals (single-level) or L1 partials (two-level) write
-            # are independent jobs on concurrent driver threads.
-            new_idx = mapped.select("uid", "kspan", "dspan").distinct()
-            errors: dict[str, BaseException] = {}
-
-            def _run(name: str, fn: Callable[[], dict[int, list[str]]]) -> None:
-                try:
-                    results[name] = fn()
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    errors[name] = e
-
-            jobs: list[tuple[str, Callable[[], dict[int, list[str]]]]] = [
-                ("idx", lambda: self._idx_t.write_data(new_idx)),
+        # Single-level finals: re-reduce the dirty key-spans' map
+        # FILES — the files the write above just landed plus the
+        # spans' retained (non-rewritten) committed files.
+        finals = None
+        if not self.two_level:
+            retained_pspans = {
+                p
+                for p in all_pspans
+                if p // self.n_sub_buckets in dirty_kspans
+            } - rewrite_pspans
+            pieces = []
+            new_files = [
+                os.path.join(self._map_t.path, f)
+                for fs in results["map"].values()
+                for f in fs
             ]
-            if finals is not None:
-                jobs.append(("fin", lambda: self._fin_t.write_data(finals)))
-            if l1_content is not None:
-                jobs.append(("l1", lambda: self._l1_t.write_data(l1_content)))
-            threads = [
-                threading.Thread(target=_run, args=(n, fn), daemon=True)
-                for n, fn in jobs
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errors:
-                raise next(iter(errors.values()))
-            if self.two_level:
-                results["fin"] = self._write_finals_from_l1(results["l1"])
-            results.setdefault("fin", {})
+            if new_files:
+                pieces.append(
+                    self.spark.read.schema(self._map_t._schema)
+                    .parquet(*new_files)
+                    .select(new_rows.columns)
+                )
+            retained = self._map_t.read(self.spark, spans=retained_pspans)
+            if retained is not None:
+                pieces.append(retained.select(new_rows.columns))
+            if pieces:
+                content = (
+                    pieces[0]
+                    if len(pieces) == 1
+                    else pieces[0].unionByName(pieces[1])
+                )
+                if self.agg_exprs is not None:
+                    finals = content.groupBy(
+                        "kspan", *self.group_cols
+                    ).agg(*self.agg_exprs)
+                else:
+                    finals = content.groupBy(
+                        "kspan", *self.group_cols
+                    ).applyInPandas(
+                        self.reduce_fn,
+                        schema=f"kspan int, {self.reduce_schema}",
+                    )
+
+        # --- remaining data-file writes run concurrently
+        # (invisible until commit): the doc-index write and the
+        # finals (single-level) or L1 partials (two-level) write
+        # are independent jobs on concurrent driver threads.
+        new_idx = mapped.select("uid", "kspan", "dspan").distinct()
+        errors: dict[str, BaseException] = {}
+
+        def _run(name: str, fn: Callable[[], dict[int, list[str]]]) -> None:
+            try:
+                results[name] = fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors[name] = e
+
+        jobs: list[tuple[str, Callable[[], dict[int, list[str]]]]] = [
+            ("idx", lambda: self._idx_t.write_data(new_idx)),
+        ]
+        if finals is not None:
+            jobs.append(("fin", lambda: self._fin_t.write_data(finals)))
+        if l1_content is not None:
+            jobs.append(("l1", lambda: self._l1_t.write_data(l1_content)))
+        threads = [
+            threading.Thread(target=_run, args=(n, fn), daemon=True)
+            for n, fn in jobs
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if errors:
+            raise next(iter(errors.values()))
+        if self.two_level:
+            results["fin"] = self._write_finals_from_l1(results["l1"])
+        results.setdefault("fin", {})
 
         # --- commit (atomic manifest swaps, dependency order; see
         # module docstring for why the index leads)
@@ -1458,20 +1126,7 @@ class MapReduceView:
             replace=results["fin"], drop=dirty_kspans - set(results["fin"])
         )
         os.remove(self._journal_path)
-        self._write_meta(
-            {
-                **meta,
-                "batch_seq": meta["batch_seq"] + 1,
-                # Sizes the next batch's maintenance jobs (see
-                # _hint_partitions); the rows the map write landed —
-                # exact from the written files' parquet footers,
-                # driver-side, no job — are the best available
-                # predictor of the next dirty slice.
-                "last_batch_rows": self._mapping_rows(
-                    self._map_t, results["map"]
-                ),
-            }
-        )
+        self._write_meta({**meta, "batch_seq": meta["batch_seq"] + 1})
 
     # ----- maintenance -----------------------------------------------------
 
@@ -1675,17 +1330,9 @@ class MapReduceView:
         unreferenced (reclaim via ``vacuum()``). Returns the number of
         pairs compacted. At 100 TB scale this is the maintenance job a
         table service would schedule off-peak."""
-        # Scoped like every other maintenance job: sized from the map
-        # table's on-disk bytes (manifest metadata — an upper bound on
-        # the rewrite's input), so a bench-scale compaction is one
-        # static small plan instead of an AQE stage cascade, and a big
-        # table keeps full parallelism.
-        with self._conf_scope(
-            self._size_partitions(0, file_bytes=self._map_t.stats()["bytes"])
-        ):
-            return self._map_t.compact(self.spark, min_files=min_files)[
-                "spans_compacted"
-            ]
+        return self._map_t.compact(self.spark, min_files=min_files)[
+            "spans_compacted"
+        ]
 
     def compact_index(self) -> None:
         """Rewrite doc_index from the map_results source of truth,
@@ -1695,15 +1342,8 @@ class MapReduceView:
         live = self._map_t.read(self.spark)
         if live is None:
             return
-        with self._conf_scope(
-            self._size_partitions(
-                0,
-                file_bytes=self._map_t.stats()["bytes"]
-                + self._idx_t.stats()["bytes"],
-            )
-        ):
-            fresh = live.select("uid", "kspan", "dspan").distinct()
-            mapping = self._idx_t.write_data(fresh)
+        fresh = live.select("uid", "kspan", "dspan").distinct()
+        mapping = self._idx_t.write_data(fresh)
         self._idx_t.commit(replace_all=mapping)
         self._idx_t.vacuum()
 
